@@ -312,17 +312,38 @@ object Caches {
     * built on the calling thread — plan construction may run
     * persistTracked/probe actions whose scope ([[releaseScoped]]) and
     * tracking are thread-local; only the materialization belongs in
-    * the thunk. Degenerate sizes run inline. */
+    * the thunk. Degenerate sizes run inline.
+    *
+    * Failure: the thunks' jobs carry one job tag (tags leave job
+    * groups and other local properties alone). The first thunk to fail
+    * cancels the tag's running jobs, thunks not yet started are
+    * skipped, and every started thunk is awaited before the first
+    * error is rethrown — so no orphaned write is still in flight when
+    * the caller retries or releases the frames the thunks read. */
   def runConcurrently[T](thunks: Seq[() => T], slots: Int = 4): Seq[T] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import java.util.concurrent.{CancellationException, ExecutionException}
     if (thunks.lengthCompare(2) < 0) return thunks.map(_())
+    val sc = SparkSession.active.sparkContext
+    val tag = s"graft-concurrent-${java.util.UUID.randomUUID()}"
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(slots, thunks.length))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(Future.sequence(thunks.map(t => Future(t()))),
-      Duration.Inf)
-    finally pool.shutdown()
+    try {
+      val running = thunks.map(t => pool.submit[T](() => {
+        if (failed.get() != null)
+          throw new CancellationException("a sibling thunk failed")
+        sc.addJobTag(tag)
+        try t()
+        catch {
+          case e: Throwable =>
+            if (failed.compareAndSet(null, e)) sc.cancelJobsWithTag(tag)
+            throw e
+        } finally sc.removeJobTag(tag)
+      }))
+      running.foreach(f => try f.get() catch { case _: ExecutionException => })
+      if (failed.get() != null) throw failed.get()
+      running.map(_.get())
+    } finally pool.shutdown()
   }
 
   /** Postfix syntax for operator code: `df.persistTracked()` reads as

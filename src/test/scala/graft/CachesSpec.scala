@@ -63,7 +63,8 @@ class CachesSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     // compose operators from every persistTracked family: dedup pair
     // finders, semantic dedup, seed-model text analysis, classifier
-    // training, graph traversal
+    // training, graph traversal (localThreshold = 0: the distributed
+    // loops, whose frames register; the small-graph path holds none)
     graft.operators.Dedup.minhashNearDupPairs(docs, "doc_id", "text",
       threshold = 0.7).count()
     graft.operators.Similarity.semanticDedup(emb, k = 4, iters = 2,
@@ -75,7 +76,8 @@ class CachesSpec extends SparkSpec {
       docs.filter(col("doc_id") % 5 =!= 0), "text").count()
     val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("d", "e"))
       .toDF("s", "d")
-    graft.graph.Traversal.labelPropagation(edges, "s", "d", iters = 2).count()
+    graft.graph.Traversal.labelPropagation(edges, "s", "d", iters = 2,
+      localThreshold = 0L).count()
     graft.operators.Dedup.incrementalExactDedup(docs,
       docs.limit(5).select(graft.functions.TextFunctions
         .fingerprintMd5(col("text")).as("fp")), "text", "doc_id").count()
@@ -91,7 +93,8 @@ class CachesSpec extends SparkSpec {
     graft.operators.Dedup.boilerplateRemoval(docs, "doc_id", "text", 3L).count()
     graft.operators.ScaleOps.tokenBudgetFilter(docs, "doc_id",
       graft.functions.TextFunctions.tokenCount(col("text")), lit(1L), 500L).count()
-    graft.graph.Traversal.hits(edges, "s", "d", iters = 1).count()
+    graft.graph.Traversal.hits(edges, "s", "d", iters = 1,
+      localThreshold = 0L).count()
     assert(Caches.trackedCount(spark) >= 10,
       s"expected every family to register, got ${Caches.trackedCount(spark)}")
     Caches.release(spark)
@@ -225,5 +228,39 @@ class CachesSpec extends SparkSpec {
       spark.range(2).toDF("id").select(col("id"), col("id").as("v")))
       .as[(Long, Long)].collect().toSet
     assert(retried.size == 2)
+  }
+
+  test("runConcurrently: a failure cancels and awaits every sibling before it surfaces") {
+    val siblingRunning = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      Caches.runConcurrently[Long](Seq(
+        () => {
+          // fail only once the sibling's job is running
+          val deadline = System.nanoTime() + 30000000000L
+          while (sc.statusTracker.getActiveStageIds().isEmpty &&
+            System.nanoTime() < deadline) Thread.sleep(20)
+          throw new IllegalStateException("boom")
+        },
+        () => {
+          siblingRunning.set(true)
+          // tasks that run 60 s unless their job is cancelled
+          try spark.range(0, 4, 1, 4).mapPartitions { it =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val end = System.nanoTime() + 60000000000L
+            while (!ctx.isInterrupted() && System.nanoTime() < end) Thread.sleep(20)
+            it
+          }.count()
+          finally siblingRunning.set(false)
+        }))
+    }
+    assert(err.getMessage == "boom", "the first failure must surface unwrapped")
+    assert(!siblingRunning.get(),
+      "a sibling thunk was still running when the failure surfaced")
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 45, s"the sibling's job was not cancelled (${secs}s)")
+    // results still come back in input order on success
+    assert(Caches.runConcurrently(Seq(() => 1, () => 2, () => 3), slots = 2) == Seq(1, 2, 3))
   }
 }

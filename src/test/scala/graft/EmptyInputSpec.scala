@@ -195,6 +195,27 @@ class EmptyInputSpec extends SparkSpec {
       noIv, "sa", "ea", noIv2, "sb", "eb", 10L).count() == 0)
   }
 
+  test("Traversal loops: the local and distributed paths agree on empty input") {
+    import graft.graph.Traversal
+    val none = Seq.empty[(String, String, Long)].toDF("src", "dst", "w")
+    val loops = Seq[(String, Long => DataFrame)](
+      "hopDistance" -> (t => Traversal.hopDistance(none, "src", "dst", Seq("a"), 2, t)),
+      "labelPropagation" -> (t => Traversal.labelPropagation(none, "src", "dst", 2, t)),
+      "kCore" -> (t => Traversal.kCore(none, "src", "dst", 2, localThreshold = t)),
+      "hits" -> (t => Traversal.hits(none, "src", "dst", 2, localThreshold = t)),
+      "shortestPath" -> (t =>
+        Traversal.shortestPath(none, "src", "dst", "w", Seq("a"), 2, t)))
+    for ((name, run) <- loops) {
+      // -1, not 0: an empty edge list fits under a threshold of 0
+      val (local, dist) = (run(graft.graph.Ranks.LocalEdgeThreshold), run(-1L))
+      assert(local.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation], name)
+      assert(local.schema == dist.schema, name)
+      assert(local.collect().map(_.toString).sorted.toSeq ==
+        dist.collect().map(_.toString).sorted.toSeq, name)
+    }
+  }
+
   test("incrementalSemanticDedup handles empty batch and empty store") {
     val cents = Array(
       (0, Array(1000000L, 0L)), (1, Array(0L, 1000000L)))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.graph.Traversal
 
@@ -134,5 +136,101 @@ class TraversalSpec extends SparkSpec {
       .as[(String, Long, Long)].collect()
       .map { case (n, a, h) => n -> ((a, h)) }.toMap
     assert(again == got)
+  }
+
+  /** The default (driver-local, for these small graphs) path and the
+    * distributed one (`localThreshold = 0`) return the same schema and
+    * exactly the same rows. `local` must really be the local path. */
+  private def sameOnBothPaths(name: String)(run: Long => DataFrame): Unit = {
+    val local = run(graft.graph.Ranks.LocalEdgeThreshold)
+    val dist = run(0L)
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      s"$name: the default path did not run on the driver")
+    assert(!dist.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      s"$name: localThreshold = 0 did not force the distributed path")
+    assert(local.schema == dist.schema, s"$name: schema")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(local) == rows(dist), s"$name: rows")
+  }
+
+  /** Every loop, both paths, over one edge list (src, dst, w). */
+  private def allLoopsAgree(tag: String, e: DataFrame, seeds: Seq[String]): Unit = {
+    sameOnBothPaths(s"$tag hopDistance")(t =>
+      Traversal.hopDistance(e, "src", "dst", seeds, maxHops = 3, localThreshold = t))
+    sameOnBothPaths(s"$tag labelPropagation")(t =>
+      Traversal.labelPropagation(e, "src", "dst", iters = 3, localThreshold = t))
+    for (k <- Seq(1, 2, 3))
+      sameOnBothPaths(s"$tag kCore k=$k")(t =>
+        Traversal.kCore(e, "src", "dst", k = k, localThreshold = t))
+    sameOnBothPaths(s"$tag hits")(t =>
+      Traversal.hits(e, "src", "dst", iters = 3, localThreshold = t))
+    sameOnBothPaths(s"$tag shortestPath")(t =>
+      Traversal.shortestPath(e, "src", "dst", "w", seeds, rounds = 4, localThreshold = t))
+  }
+
+  test("local ≡ distributed: every loop on the sf0.001 nation graph and its top-3 backbone") {
+    val edges = graft.SparkEntry.nationTradeEdges(spark, "/root/testdata/sf0.001")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("src_nation").orderBy(desc("amount"), asc("dst_nation"))
+    val top3 = edges.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") <= 3)
+      .select(col("src_nation").as("src"), col("dst_nation").as("dst"),
+        col("_rn").cast("long").as("w"))
+      .localCheckpoint()
+    allLoopsAgree("top3", top3, Seq("NATION_0"))
+    val full = edges.select(col("src_nation").as("src"), col("dst_nation").as("dst"),
+      lit(1L).as("w")).localCheckpoint()
+    sameOnBothPaths("full hits")(t =>
+      Traversal.hits(full, "src", "dst", iters = 4, localThreshold = t))
+    sameOnBothPaths("full shortestPath")(t =>
+      Traversal.shortestPath(full, "src", "dst", "w", Seq("NATION_3"), 3, localThreshold = t))
+  }
+
+  // duplicate edges, self-loops, a 3-clique (round-1 label ties), a
+  // tie between labels whose UTF-16 and UTF-8 orders disagree, a
+  // 2-cycle, and a seed with no edges
+  private val handEdges = Seq(
+    ("a", "b", 1L), ("a", "b", 1L), ("b", "b", 2L), ("b", "c", 5L),
+    ("c", "a", 1L), ("a", "c", 9L), ("c", "d", 1L), ("d", "e", 3L),
+    ("e", "d", 3L), ("x", "\uFF21", 2L), ("x", "\uD83D\uDE00", 2L))
+
+  test("local ≡ distributed: self-loops, duplicate edges, label ties, an edgeless seed") {
+    val e = handEdges.toDF("src", "dst", "w")
+    allLoopsAgree("hand", e, Seq("a", "z"))
+    // the tie at x goes to the smaller label in UTF-8 byte order
+    val lp = Traversal.labelPropagation(e, "src", "dst", iters = 1)
+      .as[(String, String)].collect().toMap
+    assert(lp("x") == "\uFF21")
+  }
+
+  test("local ≡ distributed: non-string vertex columns keep their type") {
+    val ids = handEdges.flatMap(t => Seq(t._1, t._2)).distinct.zipWithIndex.toMap
+    val asLong = handEdges.map { case (s, d, w) => (ids(s).toLong, ids(d).toLong, w) }
+      .toDF("src", "dst", "w")
+    // "01" and "0" both name vertex 0 once cast; "99" has no edges
+    allLoopsAgree("long", asLong, Seq("0", "01", "99"))
+    val asInt = handEdges.map { case (s, d, w) => (ids(s), ids(d), w.toInt) }
+      .toDF("src", "dst", "w")
+    allLoopsAgree("int", asInt, Seq("2"))
+    assert(Traversal.hits(asInt, "src", "dst", 2).schema("name").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("local ≡ distributed: kCore's fixpoint check and HITS overflow throw on both paths") {
+    val e = handEdges.toDF("src", "dst", "w")
+    for (t <- Seq(graft.graph.Ranks.LocalEdgeThreshold, 0L)) {
+      val noFix = intercept[IllegalArgumentException] {
+        Traversal.kCore(e, "src", "dst", k = 2, maxRounds = 1, localThreshold = t)
+      }
+      assert(noFix.getMessage.contains("no fixpoint"), s"threshold $t")
+      // hub seeds of 2^62: the first raw·scale product leaves BIGINT
+      val err = intercept[Exception] {
+        Traversal.hits(e, "src", "dst", iters = 1, scale = 1L << 62,
+          localThreshold = t).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage).toLowerCase)
+      assert(msgs.exists(_.contains("overflow")), s"threshold $t: $err")
+    }
   }
 }
