@@ -2,22 +2,75 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's synthetic parquet tables
   * (`/root/testdata/sf*`, schemas in FIXTURES.md §B).
   *
-  * All loads are plain `spark.read.parquet` so Catalyst keeps full
-  * pushdown/pruning freedom — at 100 TB these would be partitioned
-  * tables behind a catalog; nothing here assumes single-file inputs.
+  * Every load is a `spark.read.parquet` of the table path, so Catalyst
+  * keeps full pushdown/pruning freedom — at 100 TB these would be
+  * partitioned tables behind a catalog; nothing here assumes
+  * single-file inputs. Spark infers a parquet schema with a one-task
+  * job per read, so [[load]] keeps a per-session schema memo: the
+  * first load of a path infers, later loads pass Spark's own inferred
+  * schema back (`spark.read.schema(s).parquet`) and plan without a
+  * job. The memo key is the path, a fingerprint of its file listing
+  * (name, length, modification time of every file) and the session's
+  * parquet-read settings (every `spark.sql.parquet.*` /
+  * `spark.sql.legacy.parquet.*` value, `spark.sql.caseSensitive`,
+  * partition-column type inference) — rewritten files or a changed
+  * setting re-infer instead of going stale.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** (session, path, read settings) → (file-listing fingerprint,
+    * inferred schema); one entry per path and settings, replaced when
+    * the listing changes. Stopped sessions' entries are swept on
+    * insert, as in [[Caches.memoizedArtifact]]. */
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Seq[(String, String)]), (Seq[(String, Long, Long)], StructType)]()
+
+  /** `spark.read.parquet` of the table with the schema inferred once
+    * per session (see the header). A path that cannot be listed takes
+    * the plain read, so a missing table still raises Spark's own
+    * `PATH_NOT_FOUND`. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val listing =
+      try {
+        val root = new org.apache.hadoop.fs.Path(path)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // plain listStatus: `listFiles` builds LocatedFileStatus, whose
+        // permission copy forks a shell per file on the local file system
+        def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+          fs.listStatus(p).toSeq.flatMap(f =>
+            if (f.isDirectory) walk(f.getPath)
+            else Seq((f.getPath.toString, f.getLen, f.getModificationTime)))
+        Some(walk(root).sorted)
+      } catch { case _: java.io.IOException => None }
+    listing match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val settings = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+          k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive" ||
+          k == "spark.sql.sources.partitionColumnTypeInference.enabled"
+        }.sorted
+        val key = (spark, path, settings)
+        Option(schemaMemo.get(key)) match {
+          case Some((`files`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemaMemo.keySet.removeIf(_._1.sparkContext.isStopped)
+            schemaMemo.put(key, (files, df.schema))
+            df
+        }
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -1690,7 +1690,16 @@ object Dedup {
     * increment. */
   def incrementalConnectedComponents(storedLabels: DataFrame,
       newPairs: DataFrame, id1: String = "id1", id2: String = "id2",
-      mapBroadcastBudget: Long = 1000000L): DataFrame = {
+      mapBroadcastBudget: Long = 1000000L): DataFrame =
+    contractLabels(storedLabels, newPairs, id1, id2, mapBroadcastBudget,
+      endsKnownToFit = false)
+
+  /** [[incrementalConnectedComponents]]; `endsKnownToFit` is a budget
+    * verdict the caller already paid for a superset of the batch's
+    * endpoint set, which skips this operator's own probe. */
+  private def contractLabels(storedLabels: DataFrame, newPairs: DataFrame,
+      id1: String, id2: String, mapBroadcastBudget: Long,
+      endsKnownToFit: Boolean): DataFrame = {
     val needed = Set("id", "cluster_id")
     require(needed.subsetOf(storedLabels.columns.toSet),
       s"incrementalConnectedComponents: storedLabels must have columns " +
@@ -1705,7 +1714,7 @@ object Dedup {
     // broadcasts INTO the store scan (inner join, map-side — the store
     // is never shuffled), then the label attach happens small-vs-small
     val ends = pairs.select(explode(array(col("_a"), col("_b"))).as("id")).distinct()
-    val endsFits = fitsBudget(ends, mapBroadcastBudget)
+    val endsFits = endsKnownToFit || fitsBudget(ends, mapBroadcastBudget)
     val endsJoin = if (endsFits) broadcast(ends) else ends.hint("shuffle_hash")
     val endLabels = ends.join(stored.join(endsJoin, Seq("id")), Seq("id"), "left")
       .select(col("id"), col("cluster_id").as("_lbl"))
@@ -2337,20 +2346,34 @@ object Dedup {
     * alongside the labels. */
   def incrementalCanonical(storedLabels: DataFrame, storedPicks: DataFrame,
       newPairs: DataFrame, scores: DataFrame, idCol: String,
-      scoreCol: String, mapBroadcastBudget: Long = 1000000L): DataFrame = {
+      scoreCol: String, mapBroadcastBudget: Long = 1000000L): DataFrame =
+    incrementalCanonicalWithLabels(storedLabels, storedPicks, newPairs,
+      scores, idCol, scoreCol, mapBroadcastBudget)._2
+
+  /** [[incrementalCanonical]] returning `(updated labels, updated
+    * picks)`: the labels are [[incrementalConnectedComponents]] of the
+    * same batch, built once and shared with the pick recompute, so a
+    * caller that persists both stores pays for one contraction and one
+    * probe of the batch's endpoint set. */
+  def incrementalCanonicalWithLabels(storedLabels: DataFrame,
+      storedPicks: DataFrame, newPairs: DataFrame, scores: DataFrame,
+      idCol: String, scoreCol: String,
+      mapBroadcastBudget: Long = 1000000L): (DataFrame, DataFrame) = {
     require(Set("cluster_id", "canonical_id", "score")
       .subsetOf(storedPicks.columns.toSet),
       s"incrementalCanonical: storedPicks must carry (cluster_id, " +
         s"canonical_id, score), got ${storedPicks.columns.mkString(", ")}")
-    val labels2 = graft.core.Caches.persistTracked(
-      incrementalConnectedComponents(storedLabels, newPairs,
-        mapBroadcastBudget = mapBroadcastBudget))
     val ends = newPairs
       .select(explode(array(col("id1").cast("long"),
         col("id2").cast("long"))).as("id"))
       .filter(col("id").isNotNull).distinct()
       .persistTracked() // old-touched + new-touched lookups
     val endsFits = fitsBudget(ends, mapBroadcastBudget)
+    // the contraction's endpoint set (endpoints of the valid, non-loop
+    // pairs) is a subset of `ends`, so this verdict is also its own
+    val labels2 = graft.core.Caches.persistTracked(
+      contractLabels(storedLabels, newPairs, "id1", "id2",
+        mapBroadcastBudget, endsKnownToFit = endsFits))
     val endsJoin = if (endsFits) broadcast(ends) else ends.hint("shuffle_hash")
     // clusters whose membership could have changed: old labels of the
     // endpoints (their picks retire) and new labels of the endpoints
@@ -2377,7 +2400,7 @@ object Dedup {
         col("canonical_id").cast("long").as("canonical_id"),
         col("score").cast("long").as("score"))
       .join(oldTouched.hint("shuffle_hash"), Seq("cluster_id"), "left_anti")
-    kept.unionByName(recomputed)
+    (labels2, kept.unionByName(recomputed))
   }
 
   /** Canonical-pick RETRACTION (X196) — the forget half of the X195

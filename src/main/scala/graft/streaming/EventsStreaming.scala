@@ -732,13 +732,11 @@ object EventsStreaming {
           val b = batch.toDF()
             .select(col(id1).as("id1"), col(id2).as("id2"))
             .localCheckpoint()
-          // r22 (guide §2.6): the two snapshots are independent plans —
-          // build both on the batch thread (construction runs probes
-          // and tracked persists), then checkpoint and write each pair
-          // concurrently instead of two sequential waves
-          val lblPlan = Dedup.incrementalConnectedComponents(
-            priorLabels, b, "id1", "id2")
-          val pickPlan = Dedup.incrementalCanonical(
+          // build both snapshots on the batch thread (construction
+          // runs probes and tracked persists; one contraction feeds
+          // both), then checkpoint and write each pair concurrently
+          // instead of two sequential waves
+          val (lblPlan, pickPlan) = Dedup.incrementalCanonicalWithLabels(
             priorLabels, priorPicks, b, scores, idCol, scoreCol)
           val cps = graft.core.Caches.runConcurrently[DataFrame](Seq(
             () => lblPlan.localCheckpoint(),
@@ -1161,7 +1159,7 @@ object EventsStreaming {
         StructField(groupCol, StringType),
         StructField("n_rows", LongType),
         StructField("xor_digest", LongType),
-        StructField("sum_digest", LongType))))
+        StructField("sum_digest", LongType))), declared = false)
 
   /** The corpus manifest AS OF NOW: every batch partition's manifest
     * folded by [[graft.operators.ScaleOps.mergeManifests]] — a
@@ -1318,7 +1316,7 @@ object EventsStreaming {
         StructField("constraint", StringType),
         StructField("n_bad", LongType),
         StructField("value_bp", LongType),
-        StructField("passed", BooleanType))))
+        StructField("passed", BooleanType))), declared = false)
 
   /** Streaming incremental FINGERPRINT near-dup, micro-batch-composed
     * (X169) — the streaming form of
@@ -1406,7 +1404,7 @@ object EventsStreaming {
   def readDeadLetterStore(spark: SparkSession, path: String,
       rowSchema: StructType): DataFrame =
     readStoreOrEmpty(spark, path, StructType(rowSchema.fields :+
-      StructField("_violations", ArrayType(StringType))))
+      StructField("_violations", ArrayType(StringType))), declared = false)
 
   /** The per-batch DQ verdict store (constraint, n_bad, value_bp,
     * passed), empty-with-schema when the path does not exist yet; same
@@ -1452,37 +1450,49 @@ object EventsStreaming {
         StructField("shingles", ArrayType(StringType)),
         StructField("sig", ArrayType(StringType)))))
 
-  /** Shared store-or-empty read for the streaming increment family:
-    * partition discovery exposes the per-batch `batch=` dirs as a
-    * `batch` column; a not-yet-existing path yields the empty frame
-    * with the store's declared schema (stream-first bootstrap). The
-    * catch is NARROW — only the no-data-at-path conditions, kept in
-    * ONE place; a real read failure (corrupt store) must fail the
-    * batch, not silently restart history. */
+  /** Shared store-or-empty read for the streaming increment family.
+    * The read passes the store's declared `schema` (the columns its
+    * writers produce, in their order), so it plans without Spark's
+    * one-job schema inference; partition discovery still appends the
+    * per-batch `batch=` dirs as a `batch` column. Stores whose schema
+    * is only a bootstrap guess (`declared = false`: a caller-typed
+    * group or row column) keep the inferring read. A missing path or
+    * a store with no data files yields the empty frame with the
+    * declared schema (stream-first bootstrap) — unless an interrupted
+    * [[compactStore]] swap left `.old`/`.compacting` debris next to
+    * it, which fails loud. The catch is NARROW — only the
+    * no-data-at-path conditions, kept in ONE place; a real read
+    * failure (corrupt store) must fail the batch, not silently restart
+    * history. */
   private def readStoreOrEmpty(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    try spark.read.option("basePath", path).parquet(path)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            .exists(c => Option(e.getCondition).exists(_.startsWith(c))) =>
-        // a missing store is a legitimate stream-first bootstrap ONLY
-        // when no interrupted compactStore swap left a complete copy
-        // next door — bootstrapping empty over swap debris would
-        // silently restart history and re-admit every duplicate
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val debris = Seq(".old", ".compacting")
-          .map(s => new org.apache.hadoop.fs.Path(path + s))
-          .filter(fs.exists)
-        if (debris.nonEmpty) throw new IllegalStateException(
-          s"store at $path is missing but an interrupted compactStore " +
-            s"swap left ${debris.mkString(", ")} — recover by renaming " +
-            "the surviving copy back to the store path instead of " +
-            "bootstrapping empty (which would re-admit every duplicate)")
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      schema: StructType, declared: Boolean = true): DataFrame = {
+    val reader = spark.read.option("basePath", path)
+    val stored =
+      try Some((if (declared) reader.schema(schema) else reader).parquet(path))
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+              .exists(c => Option(e.getCondition).exists(_.startsWith(c))) => None
+      }
+    stored.filter(_.inputFiles.nonEmpty).getOrElse {
+      // a missing store is a legitimate stream-first bootstrap ONLY
+      // when no interrupted compactStore swap left a complete copy
+      // next door — bootstrapping empty over swap debris would
+      // silently restart history and re-admit every duplicate
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val debris = Seq(".old", ".compacting")
+        .map(s => new org.apache.hadoop.fs.Path(path + s))
+        .filter(fs.exists)
+      if (debris.nonEmpty) throw new IllegalStateException(
+        s"store at $path is missing but an interrupted compactStore " +
+          s"swap left ${debris.mkString(", ")} — recover by renaming " +
+          "the surviving copy back to the store path instead of " +
+          "bootstrapping empty (which would re-admit every duplicate)")
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+  }
 
   // ---------------- sessionization ----------------
 

@@ -452,6 +452,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("incrementalCanonicalWithLabels: labels == incrementalConnectedComponents, picks == full recompute") {
+    val scores = (0L until 40L).map(i => (i, i * 7 % 11)).toDF("doc_id", "q")
+    val stored = Dedup.connectedComponents(
+      Seq((1L, 2L), (10L, 11L), (20L, 21L)).toDF("id1", "id2"), "id1", "id2")
+    def fullPicks(labels: org.apache.spark.sql.DataFrame) =
+      Dedup.canonicalByScore(labels, scores, "doc_id", "q")
+        .filter(col("is_canonical"))
+        .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
+    val storedPicks = fullPicks(stored)
+    // a self-loop and a null-partner row put endpoints in the pick side's
+    // endpoint set that the contraction's (valid pairs only) lacks
+    val newPairs = Seq[(Option[Long], Option[Long])]((Some(2L), Some(10L)),
+      (Some(11L), Some(30L)), (Some(20L), Some(20L)), (Some(31L), None))
+      .toDF("id1", "id2")
+    // budget 1: the endpoint set does not fit, both sides probe and shuffle
+    for (budget <- Seq(1L, 1000000L)) {
+      val (labels, picks) = Dedup.incrementalCanonicalWithLabels(stored,
+        storedPicks, newPairs, scores, "doc_id", "q", budget)
+      val wantLabels = Dedup.incrementalConnectedComponents(stored, newPairs,
+        mapBroadcastBudget = budget)
+      assert(labels.as[(Long, Long)].collect().toSet ==
+        wantLabels.as[(Long, Long)].collect().toSet, s"budget $budget")
+      val wantPicks = fullPicks(wantLabels)
+      assert(picks.as[(Long, Long, Long)].collect().toSet ==
+        wantPicks.as[(Long, Long, Long)].collect().toSet, s"budget $budget")
+    }
+  }
+
   test("retractCanonical: re-election, component split, disappearance, == full recompute") {
     def picks(labels: org.apache.spark.sql.DataFrame,
         scores: org.apache.spark.sql.DataFrame) =

@@ -1450,6 +1450,30 @@ class StreamingSpec extends SparkSpec {
     assert(EventsStreaming.readExactStore(spark, s"$base/fresh").count() == 0L)
   }
 
+  test("store reads pass the declared schema: no Spark job, batch column kept, empty store next to debris fails loud") {
+    val base = Files.createTempDirectory("graft-store-read").toString
+    val store = s"$base/labels"
+    Seq((1L, 1L), (2L, 1L)).toDF("id", "cluster_id").write.parquet(s"$store/batch=0")
+    Seq((3L, 3L)).toDF("id", "cluster_id").write.parquet(s"$store/batch=1")
+    val (labels, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      EventsStreaming.readLabelStore(spark, store)
+    }
+    assert(jobs == 0, s"store read ran $jobs Spark jobs")
+    // the schema (order, types, partition column) the inferring read sees
+    assert(labels.schema == spark.read.option("basePath", store).parquet(store).schema)
+    assert(labels.columns.toSeq == Seq("id", "cluster_id", "batch"))
+    assert(labels.select(col("id")).as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // an existing store directory holding no data files reads as
+    // empty — unless compactStore swap debris sits next to it
+    val empty = s"$base/exact"
+    Files.createDirectories(java.nio.file.Paths.get(empty))
+    val fresh = EventsStreaming.readExactStore(spark, empty)
+    assert(fresh.columns.toSeq == Seq("fp") && fresh.count() == 0L)
+    Seq("a").toDF("fp").write.parquet(s"$empty.old/batch=-1")
+    val e = intercept[IllegalStateException](EventsStreaming.readExactStore(spark, empty))
+    assert(e.getMessage.contains("interrupted compactStore"))
+  }
+
   test("stateful sessionize emits closed sessions matching batch") {
     val ckpt = Files.createTempDirectory("graft-ckpt-sess").toString
     val evStream = spark.readStream.schema(EventsStreaming.eventSchema)
